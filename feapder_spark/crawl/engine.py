@@ -33,8 +33,7 @@ Scale notes (the 100 TB story):
   adds ⟕anti tombstones — per-iteration write bytes are O(batch), and the
   per-iteration lease READ opens only the lowest bands covering batch_size
   visible rows (_lease_band_keys; the reference zset lease bound,
-  redisdb.py:472-523), never the whole frontier.  Compaction folds
-  tombstones back in when they exceed the visible size.  The anti-join
+  redisdb.py:472-523), never the whole frontier.  The anti-join
   BROADCASTS the tombstone side while the driver-tracked delta-log row
   count is under cfg.tombs_broadcast_max_rows — the adds side then reads
   shuffle-free for the whole between-compactions window at default cadence
@@ -43,6 +42,15 @@ Scale notes (the 100 TB story):
   beyond-the-bound join is co-partitioned (storage-partitioned join); with
   the broadcast bound + compaction cadence that residual shuffle is the
   documented fallback, not the steady state.
+- storage maintenance is ONE rule (CrawlEngine._maintain) over every append
+  log the loop re-reads (frontier adds/tombs, exact seen, fetch_cache,
+  items): past FOLD_SEGMENTS segments the smallest bin-pack into one,
+  never re-folding a segment of FOLD_MAX_BYTES or more (Iceberg
+  rewrite_data_files with a target file size), so reads stay
+  O(FOLD_SEGMENTS) file opens and a fold's pause is bounded at any scale;
+  compact_frontier folds tombstones back into the adds when they reach
+  max(COMPACT_MIN_TOMBSTONES, visible size).  compact_items and
+  expire_snapshots are explicit maintenance calls, never run in-loop.
 - each iteration's lineage is cut by persisted micro-batch frames; state
   never accumulates in driver memory (no collect of data rows anywhere).
 """
@@ -120,6 +128,12 @@ TABLES = [
 
 _ITEM_KEYS = ["doc_id", "n_spans", "title", "url"]  # sorted, item.py:141-153
 
+# the storage-maintenance policy applied by CrawlEngine._maintain (see the
+# module docstring)
+FOLD_SEGMENTS = 64
+FOLD_MAX_BYTES = 256 << 20
+COMPACT_MIN_TOMBSTONES = 100_000
+
 
 def item_fp_col() -> F.Column:
     """JVM-side item fingerprint = md5 over sorted key+str(value) pairs.
@@ -136,46 +150,6 @@ class CrawlConfig:
     default_parser: str = "TestParser"
     politeness: dict | None = None  # host -> per-iteration budget; "__default__" key
     link_priority: int = S.DEFAULT_PRIORITY
-    # frontier tombstone compaction: fold the delta log back into the adds
-    # table when tombstones exceed max(this floor, visible frontier size)
-    compact_min_tombstones: int = 100_000
-    # ALSO compact when the adds table accumulates this many append segments
-    # (one per commit): on a huge frontier the tombstone threshold fires
-    # rarely, while per-band FILE counts grow with every iteration — this
-    # bounds them independently (Iceberg rewrite_data_files cadence)
-    compact_min_segments: int = 512
-    # small-file fold cadence for every append log the loop RE-READS each
-    # iteration — the frontier delta logs (adds/tombs) plus the exact-mode
-    # seen log and the response cache (Iceberg rewrite_data_files
-    # bin-pack, store/snapshot.fold_segments): past this many appended
-    # segments the SMALLEST fold into one — no anti-join, no tombstone
-    # reconciliation, O(bytes-folded) cost, LSM-amortized — so
-    # per-iteration read cost stays O(fold_min_segments) file opens while
-    # compact_frontier's O(visible) rewrite stays reserved for the
-    # tombstone-ratio trigger (at a 10^10 frontier an in-loop full rewrite
-    # is the same unbounded pause compact_items was decoupled for).
-    # seen/fetch_cache grow with no compaction reset, so their folds are
-    # size-capped by items_fold_max_bytes like the items table.
-    # None disables (file counts then bounded by compact_min_segments).
-    fold_min_segments: int | None = 64
-    # items-table minor fold: the items table appends one segment per
-    # flushing iteration FOREVER (no compaction resets it by default —
-    # see items_compact_min_segments), so its bucket-pruned dedup reads
-    # open linearly-growing file counts.  Same bin-pack as the frontier
-    # fold, but SIZE-CAPPED (items_fold_max_bytes, Iceberg's
-    # target-file-size): segments at/above the cap are never re-folded,
-    # so one in-loop fold costs ≤ cap × n_fold even at 10^10 items —
-    # bounded pause, unlike the O(table) compact_items.  None disables.
-    items_fold_min_segments: int | None = 64
-    items_fold_max_bytes: int = 256 << 20
-    # items-table compaction cadence, DECOUPLED from the frontier trigger:
-    # frontier compaction is bounded by the delta log, but compact_items
-    # rewrites the ENTIRE items table — at 10^10 items an in-loop rewrite is
-    # an unbounded O(table) pause inside one crawl iteration.  Default None
-    # = never auto-compact items; run engine.compact_items() out-of-band
-    # (the Iceberg rewrite_data_files maintenance pattern).  Setting an int
-    # re-enables the in-loop segment-count trigger for small deployments.
-    items_compact_min_segments: int | None = None
     # visible-set anti-join shape (the co-partitioning seam, VERDICT r4 #5):
     # when the tombstone delta log is at most this many rows, broadcast the
     # tombstone side — the adds side then never shuffles for visibility
@@ -1443,60 +1417,19 @@ class CrawlEngine:
             routed.unpersist()
         if accrued is not None:
             accrued.unpersist()
-        m_adds = self.t("frontier").manifest()
-        if self.tombstone_rows >= max(self.cfg.compact_min_tombstones, self.frontier_size):
-            self.compact_frontier()
-        elif m_adds is not None and len(m_adds.segments or []) >= self.cfg.compact_min_segments:
-            # segment-count trigger: on a huge frontier the tombstone
-            # threshold fires rarely while per-band file counts grow every
-            # iteration — fold them independently.  With the minor fold
-            # below at its default this backstop is rarely reached.
-            self.compact_frontier()
-        elif self.cfg.fold_min_segments is not None:
-            # minor fold: bounds BOTH delta logs' file counts every
-            # iteration without the full O(visible) rewrite — the fold is a
-            # row-identical single-table commit, so no checkpoint is needed
-            # (a rollback across it is a no-op) and a crash between the two
-            # folds leaves each table individually consistent
-            self.t("frontier").fold_segments(self.cfg.fold_min_segments)
-            self.t("frontier_tombs").fold_segments(self.cfg.fold_min_segments)
-        if self.cfg.fold_min_segments is not None:
-            # the OTHER per-iteration-read append logs: exact-mode seen
-            # (anti-join right side + TTL expiry, one segment per
-            # iteration forever — the 560-iteration soak measured this as
-            # the residual linear drift once the frontier logs were
-            # bounded) and the response cache.  Size-capped like items:
-            # both grow without a compaction reset, so full-sized fold
-            # outputs must be exempt for the pause to stay bounded.
-            # docs/crawl_order/failed also grow but are not read in-loop —
-            # their folding stays out-of-band maintenance.
-            self.t("seen").fold_segments(
-                self.cfg.fold_min_segments,
-                max_fold_bytes=self.cfg.items_fold_max_bytes,
-            )
-            self.t("fetch_cache").fold_segments(
-                self.cfg.fold_min_segments,
-                max_fold_bytes=self.cfg.items_fold_max_bytes,
-            )
-        if self.cfg.items_fold_min_segments is not None:
-            # size-capped bin-pack: bounds the items table's file count
-            # without the O(table) rewrite (full-sized fold outputs are
-            # exempt, so the pause is bounded by the byte cap at any scale)
-            self.t("items").fold_segments(
-                self.cfg.items_fold_min_segments,
-                max_fold_bytes=self.cfg.items_fold_max_bytes,
-            )
-        if self.cfg.items_compact_min_segments is not None:
-            # opt-in ONLY: unlike the frontier fold (bounded by the delta
-            # log) this rewrites the whole items table — out-of-band
-            # maintenance by default (cfg.items_compact_min_segments)
-            m_items = self.t("items").manifest()
-            if (
-                m_items is not None
-                and len(m_items.segments or []) >= self.cfg.items_compact_min_segments
-            ):
-                self.compact_items()
+        self._maintain()
         return st
+
+    def _maintain(self) -> None:
+        """In-loop storage maintenance: compact the frontier when
+        tombstones outgrow it, then fold every append log the loop re-reads
+        (docs/crawl_order/failed are not re-read).  A fold is a
+        row-identical single-table commit, so it needs no checkpoint and a
+        crash between folds leaves each table consistent."""
+        if self.tombstone_rows >= max(COMPACT_MIN_TOMBSTONES, self.frontier_size):
+            self.compact_frontier()
+        for name in ("frontier", "frontier_tombs", "seen", "fetch_cache", "items"):
+            self.t(name).fold_segments(FOLD_SEGMENTS, max_fold_bytes=FOLD_MAX_BYTES)
 
     def expire_snapshots(self, keep_checkpoints: int = 2) -> dict:
         """Storage GC (Iceberg expire_snapshots parity): drop table versions

@@ -118,9 +118,9 @@ ratios are if anything slightly overstated.)
 ROUND5_SECTION = """## 5. Round-5 notes (measured 2026-08-17, pinned)
 
 - **Compaction soak at the DEFAULT cadence** (VERDICT r4 #8;
-  scripts/run_soak.py, 560 TTL-mode iterations, compact_min_segments=512
-  untouched): the adds delta log grew to 511 segments, the default
-  segment-count trigger fired ONCE, folded it to 1 segment/band (50 leaf
+  scripts/run_soak.py, 560 TTL-mode iterations, the since-removed
+  512-segment compaction trigger untouched): the adds delta log grew to 511
+  segments, the default segment-count trigger fired ONCE, folded it to 1 segment/band (50 leaf
   files at end, 48 post-compaction iterations), and per-iteration wall
   stayed bounded — first decile 3.79 s, last decile 6.84 s, **decile ratio
   1.81 ≤ 2**; the pre-compaction peak (~2x first-decile, dominated by the

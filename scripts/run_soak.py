@@ -1,14 +1,15 @@
 """Long-run compaction soak (VERDICT r4 #8): 560 TTL-mode crawl iterations
-with every compaction knob AT ITS DEFAULT, recording per-iteration wall
+under the engine's storage-maintenance policy, recording per-iteration wall
 time and frontier segment/file counts.
 
 What it proves: per-band file counts grow one segment per iteration until
-the default MINOR FOLD fires (fold_min_segments=64, round 5's answer to the
-r5 soak observation that wall drifted ~15 ms/segment/iteration): the
-smallest segments bin-pack into one (store/snapshot.fold_segments, no
-anti-join), so the per-iteration read cost — and therefore the wall —
-stays flat for arbitrarily many iterations, with the full compact_frontier
-reserved for the tombstone-ratio trigger and the 512-segment backstop.
+the engine's MINOR FOLD fires (past engine.FOLD_SEGMENTS=64 segments,
+round 5's answer to the r5 soak observation that wall drifted
+~15 ms/segment/iteration): the smallest segments bin-pack into one
+(store/snapshot.fold_segments, no anti-join), so the per-iteration read
+cost — and therefore the wall — stays flat for arbitrarily many
+iterations, with the full compact_frontier reserved for the
+tombstone-ratio trigger.
 TTL mode (seen_ttl_iterations) keeps the frontier perpetually
 re-claimable, which is exactly the reference's ExpireFilter
 incremental-crawl loop — the configuration where a crawl genuinely runs
@@ -41,13 +42,14 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
+    from feapder_spark.crawl import engine as engine_module
     from feapder_spark.crawl.engine import CrawlConfig, CrawlEngine
     from feapder_spark.crawl.synthweb import SyntheticWeb
 
     web = SyntheticWeb(n_hosts=2, pages_per_host=8, seed=42, flaky_every=10**9)
-    cfg = CrawlConfig(batch_size=6, seen_ttl_iterations=3)  # all knobs default
-    assert cfg.compact_min_segments == 512, "soak must run the DEFAULT cadence"
-    assert cfg.fold_min_segments == 64, "soak must run the DEFAULT fold cadence"
+    cfg = CrawlConfig(batch_size=6, seen_ttl_iterations=3)
+    assert engine_module.FOLD_SEGMENTS == 64, "soak must run the DEFAULT fold cadence"
+    assert engine_module.COMPACT_MIN_TOMBSTONES == 100_000, "soak must run the DEFAULT cadence"
     engine = CrawlEngine(spark, wh, web, cfg)
     engine.seed(web.seeds(4))
 
@@ -61,8 +63,8 @@ def main() -> int:
     engine.compact_frontier = _compact_counted
     adds_t = engine.t("frontier")
     orig_fold = adds_t.fold_segments
-    def _fold_counted(max_segments):
-        v = orig_fold(max_segments)
+    def _fold_counted(max_segments, max_fold_bytes=None):
+        v = orig_fold(max_segments, max_fold_bytes=max_fold_bytes)
         if v is not None:
             counts["folds"] += 1
         return v
@@ -96,7 +98,7 @@ def main() -> int:
     }
     print(json.dumps(report))
     ok = True
-    if n > cfg.fold_min_segments + 8 and counts["folds"] + counts["compactions"] == 0:
+    if n > engine_module.FOLD_SEGMENTS + 8 and counts["folds"] + counts["compactions"] == 0:
         ok = False  # the default maintenance cadence must have fired
     if report["decile_ratio"] > 2.0:
         ok = False  # lease/iteration wall must stay flat across the soak

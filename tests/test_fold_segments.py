@@ -1,7 +1,7 @@
 """Minor fold (Iceberg rewrite_data_files bin-pack) for partitioned-append
 delta logs: `SnapshotTable.fold_segments` rewrites the smallest appended
 segments into one, preserving rows, schema, per-key placement, and manifest
-meta — so per-iteration reader file-opens stay O(fold_min_segments) instead
+meta — so per-iteration reader file-opens stay O(FOLD_SEGMENTS) instead
 of O(commits), without the full O(visible) `compact_frontier` rewrite.
 
 Reference analogue: the zset never fragments (one Redis structure,
@@ -11,11 +11,13 @@ append-only commits, and this is the LSM-amortized maintenance that pays it.
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
+from feapder_spark.crawl import engine as engine_module
 from feapder_spark.crawl.engine import CrawlConfig, CrawlEngine
 from feapder_spark.crawl.synthweb import SyntheticWeb
-from feapder_spark.store.snapshot import SnapshotStore
+from feapder_spark.store.snapshot import SnapshotStore, SnapshotTable
 
 
 def _append_n(spark, t, n, rows_per=3, keys=(0, 1, 2)):
@@ -199,22 +201,29 @@ def test_fold_noops_on_partition_mode_and_small_tables(spark, tmp_path):
     assert store.table("empty").fold_segments(4) is None
 
 
-def test_engine_fold_bounds_segments_and_preserves_crawl(spark, tmp_path):
-    """The in-loop minor fold (cfg.fold_min_segments) bounds BOTH delta
-    logs' segment counts across many iterations while leaving the crawl
-    byte-identical to an unfolded run — and the banded lease pruning
-    (manifest part_rows) keeps working across folds."""
+@pytest.fixture(scope="module")
+def unfolded(spark, tmp_path_factory):
+    """The reference the engine-level fold tests compare against: 8
+    iterations at the default cadence, where no fold fires."""
     web = SyntheticWeb(n_hosts=2, pages_per_host=6, seed=42)
     ref = CrawlEngine(
-        spark, str(tmp_path / "ref"), web,
-        CrawlConfig(batch_size=3, fold_min_segments=None),
+        spark, str(tmp_path_factory.mktemp("unfolded")), web,
+        CrawlConfig(batch_size=3, items_prune_min_leaf_parts=0),
     )
     ref.seed(web.seeds(4))
     ref.run(max_iterations=8)
+    return ref
 
+
+def test_engine_fold_bounds_segments_and_preserves_crawl(spark, tmp_path, monkeypatch, unfolded):
+    """The in-loop minor fold (engine.FOLD_SEGMENTS) bounds BOTH delta
+    logs' segment counts across many iterations while leaving the crawl
+    byte-identical to an unfolded run — and the banded lease pruning
+    (manifest part_rows) keeps working across folds."""
+    web, ref = unfolded.resolver, unfolded
+    monkeypatch.setattr(engine_module, "FOLD_SEGMENTS", 4)
     eng = CrawlEngine(
-        spark, str(tmp_path / "fold"), web,
-        CrawlConfig(batch_size=3, fold_min_segments=4),
+        spark, str(tmp_path / "fold"), web, CrawlConfig(batch_size=3),
     )
     eng.seed(web.seeds(4))
     eng.run(max_iterations=8)
@@ -237,24 +246,18 @@ def test_engine_fold_bounds_segments_and_preserves_crawl(spark, tmp_path):
     assert eng._lease_band_keys(3) is not None, "band pruning survives folds"
 
 
-def test_engine_items_fold_bounds_segments_preserves_rows_and_pruning(spark, tmp_path):
-    """The size-capped items fold (cfg.items_fold_min_segments) bounds the
-    items table's segment count in-loop without the opt-in O(table)
+def test_engine_items_fold_bounds_segments_preserves_rows_and_pruning(
+    spark, tmp_path, monkeypatch, unfolded
+):
+    """The size-capped items fold (engine.FOLD_SEGMENTS) bounds the items
+    table's segment count in-loop without the explicit O(table)
     compact_items, leaving rows, dedup pruning safety, and bucket-pruned
     reads intact."""
-    web = SyntheticWeb(n_hosts=2, pages_per_host=6, seed=42)
-    ref = CrawlEngine(
-        spark, str(tmp_path / "ref"), web,
-        CrawlConfig(batch_size=3, items_fold_min_segments=None,
-                    items_prune_min_leaf_parts=0),
-    )
-    ref.seed(web.seeds(4))
-    ref.run(max_iterations=8)
-
+    web, ref = unfolded.resolver, unfolded
+    monkeypatch.setattr(engine_module, "FOLD_SEGMENTS", 3)
     eng = CrawlEngine(
         spark, str(tmp_path / "fold"), web,
-        CrawlConfig(batch_size=3, items_fold_min_segments=3,
-                    items_prune_min_leaf_parts=0),
+        CrawlConfig(batch_size=3, items_prune_min_leaf_parts=0),
     )
     eng.seed(web.seeds(4))
     eng.run(max_iterations=8)
@@ -272,16 +275,67 @@ def test_engine_items_fold_bounds_segments_preserves_rows_and_pruning(spark, tmp
     assert m.seg_parts, "fold output must keep per-bucket placement"
 
 
-def test_fold_plays_with_checkpoint_resume_and_gc(spark, tmp_path):
+def test_engine_fold_byte_cap_exempts_full_segments(spark, tmp_path, monkeypatch, unfolded):
+    """The in-loop policy passes engine.FOLD_MAX_BYTES to every log's fold:
+    a segment at or above the cap is never re-folded, on a frontier delta
+    log or on items, and the crawl and its pruning facts match an unfolded
+    run."""
+    web, ref = unfolded.resolver, unfolded
+    # cap at the smaller of the two logs' largest segments: each log then
+    # holds at least one full-sized segment next to many foldable ones
+    cap = min(
+        max(ref.t(name).manifest().seg_bytes.values())
+        for name in ("frontier", "items")
+    )
+    monkeypatch.setattr(engine_module, "FOLD_SEGMENTS", 3)
+    monkeypatch.setattr(engine_module, "FOLD_MAX_BYTES", cap)
+
+    folds = []  # (table, segment sizes before, segments after) per fold
+    orig_fold = SnapshotTable.fold_segments
+
+    def recording_fold(self, max_segments, max_fold_bytes=None):
+        assert max_fold_bytes == cap, "every in-loop fold carries the cap"
+        before = self.manifest()
+        v = orig_fold(self, max_segments, max_fold_bytes=max_fold_bytes)
+        if v is not None and self.name in ("frontier", "frontier_tombs", "items"):
+            sizes = {s: before.seg_bytes[s] for s in before.segments}
+            folds.append((self.name, sizes, set(self.manifest().segments)))
+        return v
+
+    monkeypatch.setattr(SnapshotTable, "fold_segments", recording_fold)
+    eng = CrawlEngine(spark, str(tmp_path / "fold"), web, ref.cfg)
+    eng.seed(web.seeds(4))
+    eng.run(max_iterations=8)
+
+    for name in ("frontier", "items"):
+        mine = [f for f in folds if f[0] == name]
+        assert mine, f"{name} must fold in-loop"
+        assert any(
+            size >= cap and s in after
+            for _, sizes, after in mine
+            for s, size in sizes.items()
+        ), f"{name} must hold a full-sized segment through a fold"
+    for name, sizes, after in folds:
+        refolded = {s: n for s, n in sizes.items() if s not in after}
+        assert refolded and all(n < cap for n in refolded.values()), (name, cap, refolded)
+
+    def order(e):
+        return [r.fingerprint for r in e.t("crawl_order").read().orderBy("seq").collect()]
+
+    assert order(eng) == order(ref)
+    assert eng._lease_band_keys(3) == ref._lease_band_keys(3)
+    assert eng._items_pruning_safe() and ref._items_pruning_safe()
+
+
+def test_fold_plays_with_checkpoint_resume_and_gc(spark, tmp_path, monkeypatch):
     """A fold commits a row-identical version ABOVE the last checkpoint:
     resume (rollback to the checkpointed pre-fold versions) must still see
     every row (GC retains the checkpointed manifests' segments), and a
     later expire sweeps the dereferenced fold output."""
+    monkeypatch.setattr(engine_module, "FOLD_SEGMENTS", 3)
     web = SyntheticWeb(n_hosts=2, pages_per_host=6, seed=42)
     wh = str(tmp_path / "wh")
-    eng = CrawlEngine(
-        spark, wh, web, CrawlConfig(batch_size=3, fold_min_segments=3),
-    )
+    eng = CrawlEngine(spark, wh, web, CrawlConfig(batch_size=3))
     eng.seed(web.seeds(4))
     eng.run(max_iterations=6)
     frontier_before = sorted(
@@ -290,9 +344,7 @@ def test_fold_plays_with_checkpoint_resume_and_gc(spark, tmp_path):
     eng.expire_snapshots(keep_checkpoints=2)
 
     # second process resumes: rollback crosses the fold-bumped versions
-    e2 = CrawlEngine(
-        spark, wh, web, CrawlConfig(batch_size=3, fold_min_segments=3),
-    )
+    e2 = CrawlEngine(spark, wh, web, CrawlConfig(batch_size=3))
     assert e2.resume()
     assert sorted(
         tuple(r) for r in e2.frontier().select("fingerprint").collect()

@@ -1,6 +1,7 @@
 """Resume-from-checkpoint: kill after k iterations, restart, final state
 equals the uninterrupted run (SURVEY §5 test plan #3)."""
 
+from feapder_spark.crawl import engine as engine_module
 from feapder_spark.crawl.engine import CrawlConfig, CrawlEngine
 from feapder_spark.crawl.oracle import run_oracle
 from feapder_spark.crawl.synthweb import SyntheticWeb
@@ -60,7 +61,7 @@ def test_resume_equals_uninterrupted(spark, tmp_path):
     assert all(a[b] - t.get(b, 0) == 0 for b in a), (a, t)
 
 
-def test_compaction_preserves_crawl_equivalence(spark, tmp_path):
+def test_compaction_preserves_crawl_equivalence(spark, tmp_path, monkeypatch):
     """compact_frontier is pure maintenance: with compaction forced after
     EVERY iteration, the crawl must replay the oracle unchanged, and the
     tombstone log must stay empty after each fold."""
@@ -71,7 +72,8 @@ def test_compaction_preserves_crawl_equivalence(spark, tmp_path):
     seeds = web.seeds(4)
     golden = run_oracle(web, seeds, batch_size=8)
 
-    cfg = CrawlConfig(batch_size=8, compact_min_tombstones=1)
+    monkeypatch.setattr(engine_module, "COMPACT_MIN_TOMBSTONES", 1)
+    cfg = CrawlConfig(batch_size=8)
     engine = CrawlEngine(spark, str(tmp_path / "wh"), web, cfg)
     engine.seed(seeds)
     engine.run()
